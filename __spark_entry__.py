@@ -6,7 +6,7 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash -> CORRECTNESS_r{N}.json).
 
 The implementations live in mysql_log_parser_spark.entry_queries; each Spark
-query runs the real pipeline (render corpus -> parse via mapInPandas ->
+query runs the real pipeline (render corpus -> parse via mapInArrow ->
 fingerprint via Catalyst regex chain -> aggregate), while the oracle derives
 the expected result independently from the source columns.
 """
@@ -51,7 +51,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # missing" #1 — the 13-entry tail the r4 cap cut), and (c) entries whose
 # implementation changed after their r04 gate must lead; the cap's
 # remainder is filled with the OLDEST (r03-latest) rows so every entry's
-# driver row stays as fresh as 112 entries / 50-cap allows.
+# gate row stays as fresh as 104 entries / 50-cap allows.
 _VERIFY_FIRST = [
     # (a) new this round, never driver-gated
     "ann_ivfpq_residual",
@@ -75,12 +75,10 @@ _VERIFY_FIRST = [
     "split_assign",
     "stratified_sample",
     # (c) implementation changed after their r04 gate (round-5 commits:
-    # skew-safe span counts, fast winnow kernel + negative injected ids,
-    # double-safe DSIR, bounded LSH caches + shared oracle builder,
+    # skew-safe span counts, double-safe DSIR, bounded LSH caches + shared
+    # oracle builder,
     # PQ encode routing + prenormed rerank + residual audit, snapshot-log
     # prefix guard, sampled-BPE oracle builder param)
-    "winnow_fingerprints",
-    "winnow_dup_pairs",
     "dsir_weights",
     "incremental_lsh_dedup",
     "stream_lsh_dedup",
@@ -106,7 +104,6 @@ _VERIFY_FIRST = [
     "slow_admin_filter",
     "slow_digest_merge",
     "slow_bucketed_join",
-    "multimodal_resize",
     "slow_window_topk",
     "slow_db_capture",
     "slow_set_skip",

@@ -1,17 +1,22 @@
 """Benchmark harness (driver contract).
 
-Runs the headline pipeline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+Runs the headline pipeline queries at $SPARK_GRAFT_SF_DIR (default: the
+sf0.1 test data) on local[$SPARK_GRAFT_CPUS].  The last stdout line is one
+compact JSON headline:
 
-  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-   "events_per_sec": ..., "cpus": ...}
+  {"metric": ..., "value": N, "unit": "sec", "sf": ..., "events_per_sec": ...,
+   "cpus": ..., "timings_file": ...}
+
+Per-query timings go to the JSON file named by `timings_file`
+(.bench_data/bench_timings.json), so the headline stays short enough for a
+tail capture however many queries are timed.
 
 Protocol:
 
 1. prepare (untimed, cached): render the deterministic slow-log corpus from
    {sf}/events.parquet, encode to the tokens-table input contract
    (doc_id, tokens array<int32>, n_tok, source), write parquet.
-2. flagship (timed): tokens parquet -> detokenize+parse (mapInPandas) ->
+2. flagship (timed): tokens parquet -> detokenize+parse (mapInArrow) ->
    fingerprint (Catalyst regex chain) -> per-class digest (GK-sketch
    percentiles) -> noop sink.  `events_per_sec` over this span is the
    reference CLI's own throughput metric (bin/parser-cli.go:124-127).
@@ -138,7 +143,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    from mysql_log_parser_spark import entry_queries as EQ
     from mysql_log_parser_spark.functions.fingerprint import with_fingerprint
     from mysql_log_parser_spark.operators.aggregate import class_digest, global_digest
     from mysql_log_parser_spark.operators.parse import parse_slowlog, promote_metrics
@@ -236,12 +240,10 @@ def main() -> None:
         shutil.rmtree(s_ckpt, ignore_errors=True)
 
     if os.environ.get("SPARK_GRAFT_QUERIES", "all") != "flagship":
-        from mysql_log_parser_spark.entry_queries_ext import EXT_QUERIES
-        from mysql_log_parser_spark.entry_queries_textops import TEXTOPS_QUERIES
+        from __spark_entry__ import queries
 
-        timed = dict(EQ.QUERIES)
-        timed.update(EXT_QUERIES)
-        timed.update(TEXTOPS_QUERIES)
+        # the stream_* entries repeat the streaming leg timed above
+        timed = {n: fn for n, fn in queries().items() if not n.startswith("stream_")}
         # the O(N^2) correctness baseline is deliberately not a benchmark surface
         timed.pop("ngram_jaccard_pairs", None)
         # sketch-vs-exact gate queries carry exact-mode collect_list bounds
@@ -258,7 +260,7 @@ def main() -> None:
         # per invocation; the write path is already benched by
         # route_fanout_write and the parse by the flagship
         timed.pop("slow_checkpoint_resume", None)
-        for name, (fn, _) in timed.items():
+        for name, fn in timed.items():
             timings[name] = round(
                 _timed_min(lambda: _materialize(fn(spark, sf_dir)), q_repeats), 3
             )
@@ -268,11 +270,17 @@ def main() -> None:
     # across rounds; raw seconds move with the host.
     control = control_kernel_sec(cpus)
 
+    timings_file = os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), ".bench_data", "bench_timings.json"
+    )
+    os.makedirs(os.path.dirname(timings_file), exist_ok=True)
+    with open(timings_file, "w") as f:
+        json.dump(timings, f, indent=1, sort_keys=True)
+
     out = {
         "metric": "end_to_end_pipeline_sec",
         "value": round(flagship, 3),
         "unit": "sec",
-        "queries": timings,
         "sf": sf_dir,
         "events": n_events,
         "events_per_sec": round(n_events / flagship, 1),
@@ -282,8 +290,9 @@ def main() -> None:
     }
     if stream_sec is not None:
         out["stream_events_per_sec"] = round(n_events / stream_sec, 1)
-    print(json.dumps(out))
+    out["timings_file"] = os.path.relpath(timings_file)
     spark.stop()
+    print(json.dumps(out), flush=True)
 
 
 if __name__ == "__main__":

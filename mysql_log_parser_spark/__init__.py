@@ -4,7 +4,7 @@ Go pipeline (shiviyer/mysql-log-parser), re-expressed Spark-first:
 
     tokens table (doc_id, tokens:array<int32>, n_tok, source)
       -> detokenize (Arrow-vectorized)
-      -> event assembly/parse (mapInPandas vectorized state machine)
+      -> event assembly/parse (mapInArrow vectorized state machine)
       -> fingerprint + class_id (native Catalyst regex chain)
       -> enrich (broadcast dim joins)
       -> route (per-source sinks)

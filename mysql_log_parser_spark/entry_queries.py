@@ -23,11 +23,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType
+from pyspark.sql.types import ArrayType, IntegerType, StringType
 
 from mysql_log_parser_spark.functions.fingerprint import checksum, fingerprint, with_fingerprint
 from mysql_log_parser_spark.operators.aggregate import _exact_rank
 from mysql_log_parser_spark.operators.parse import parse_slowlog, promote_metrics
+from mysql_log_parser_spark.tokenizer import decode_batch
 
 EVENTS_PER_DOC = 20
 
@@ -57,6 +58,12 @@ def encode_tokens(texts: pd.Series) -> pd.Series:
     return texts.map(
         lambda t: np.frombuffer(t.encode("utf-8"), dtype=np.uint8).astype(np.int32)
     )
+
+
+@pandas_udf(StringType())
+def decode_tokens(tokens: pd.Series) -> pd.Series:
+    """Vectorized token-array -> text decoder (tokenizer.decode_batch)."""
+    return pd.Series(decode_batch(tokens))
 
 
 def docs_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -417,3 +424,43 @@ FROM e GROUP BY usr, host
 """
 
 QUERIES["slow_user_agg"] = (q_user_agg, O_USER_AGG)
+
+
+# -- token codec round-trip gate ----------------------------------------------
+
+def q_tokens_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end gate on the input-table codec (tokenizer.py): rendered
+    slow-log doc -> int32 token array (the table contract) -> decoded text,
+    hashed.  The oracle re-renders each doc from the event columns, so any
+    lossiness in the encode/decode pair (truncation, signedness, range
+    wrap) flips the hash.  One Arrow pass each way, no shuffle."""
+    d = docs_from_events(spark, sf_dir).select(
+        "doc_id", encode_tokens("text").alias("tokens")
+    )
+    return d.select(
+        "doc_id",
+        F.size("tokens").cast("long").alias("n_tok"),
+        F.md5(decode_tokens("tokens")).alias("text_md5"),
+    )
+
+
+O_TOKENS_ROUNDTRIP = _ORACLE_EVENTS_CTE + """
+, t AS (
+  SELECT doc_id,
+         string_agg(concat_ws(chr(10),
+           '# Time: 240101 10:00:00',
+           '# User@Host: ' || usr || '[' || usr || '] @ ' || host || ' []',
+           '# Query_time: ' || printf('%.6f', qt)
+             || '  Lock_time: 0.000000 Rows_sent: ' || rows_sent
+             || '  Rows_examined: ' || rows_examined,
+           query || ';',
+           ''), '' ORDER BY event_id) AS text
+  FROM e GROUP BY doc_id
+)
+SELECT doc_id,
+       CAST(octet_length(encode(text)) AS BIGINT) AS n_tok,
+       md5(text) AS text_md5
+FROM t
+"""
+
+QUERIES["tokens_roundtrip"] = (q_tokens_roundtrip, O_TOKENS_ROUNDTRIP)

@@ -1,7 +1,7 @@
 """Second wave of driver-contract queries: the remaining SURVEY.md §2
 surfaces (example selection A9, rate-limit consistency A11, admin filtering
 F5, event-time windowing) plus training-data ops not yet exposed (exact
-n-gram Jaccard dedup, multimodal binary feature plumbing, IVF-style ANN).
+n-gram Jaccard dedup, IVF-style ANN).
 
 Each Spark query is paired with an independent DuckDB oracle.  The slow-log
 queries render a second corpus variant (rate-limit header lines, interleaved
@@ -21,10 +21,8 @@ from pyspark.sql import functions as F
 from mysql_log_parser_spark.entry_queries import _ORACLE_EVENTS_CTE, parsed_events
 from mysql_log_parser_spark.operators.parse import parse_slowlog, promote_metrics
 from mysql_log_parser_spark.textops.dedup import ngram_jaccard_pairs_bruteforce
-from mysql_log_parser_spark.textops.multimodal import extract_features
 from mysql_log_parser_spark.textops.similarity import cosine
 
-HEXD = "0123456789abcdef"
 EVENTS_PER_DOC = 20
 
 
@@ -334,69 +332,6 @@ WHERE len(list_filter(a.sh, x -> list_contains(b.sh, x)))
 """
 
 
-# -- multimodal: binary column -> Arrow-batched feature extraction ------------
-
-_MM_DIM = 8
-
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real multimodal plumbing over opaque binary payloads: documents.text
-    encoded to a binary column, decoded/featurized by the mapInPandas kernel
-    (textops/multimodal.py, deterministic fake decode = md5-seeded floats).
-    Features are emitted as exact permille integers so the oracle can
-    reproduce them from md5 hex digits alone."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    media = d.select(
-        F.concat(F.lit("m"), F.col("doc_id").cast("string")).alias("id"),
-        F.when(F.col("doc_id") % 3 == 0, F.lit("image"))
-        .when(F.col("doc_id") % 3 == 1, F.lit("audio"))
-        .otherwise(F.lit("video"))
-        .alias("kind"),
-        F.encode(F.col("text"), "utf-8").alias("data"),
-    )
-    feats = extract_features(media, decoder="fake", dim=_MM_DIM)
-    return feats.select(
-        "id",
-        "kind",
-        F.col("n_bytes").cast("long").alias("n_bytes"),
-        *[
-            F.round(F.element_at("feature", j + 1) * 1000)
-            .cast("long")
-            .alias(f"feat{j}")
-            for j in (0, 1, 3)
-        ],
-    )
-
-
-def _o_multimodal() -> str:
-    # byte k (0-based) of the md5 digest, from its hex string h
-    def byte(k: int) -> str:
-        hi = f"(strpos('{HEXD}', substr(h, {2 * k + 1}, 1)) - 1)"
-        lo = f"(strpos('{HEXD}', substr(h, {2 * k + 2}, 1)) - 1)"
-        return f"({hi} * 16 + {lo})"
-
-    # little-endian uint32 j over the 16-byte digest repeated (fake decode
-    # tiles the digest to dim*4 bytes)
-    def u32(j: int) -> str:
-        parts = [f"{byte((4 * j + b) % 16)} * {256 ** b}" for b in range(4)]
-        return "(" + " + ".join(parts) + ")"
-
-    feats = ", ".join(f"CAST({u32(j)} % 1000 AS BIGINT) AS feat{j}" for j in (0, 1, 3))
-    return f"""
-WITH m AS (
-  SELECT 'm' || CAST(doc_id AS VARCHAR) AS id,
-         CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-         md5(text) AS h
-  FROM documents
-)
-SELECT id, kind, n_bytes, {feats} FROM m
-"""
-
-
-O_MULTIMODAL = _o_multimodal()
-
-
 # -- IVF-style ANN: coarse quantize to centroid cells, search within cell -----
 
 _IVF_C = 4          # number of centroid cells
@@ -506,7 +441,6 @@ EXT_QUERIES = {
     "slow_example_select": (q_example_select, O_EXAMPLE_SELECT),
     "slow_example_ts": (q_example_ts, O_EXAMPLE_TS),
     "ngram_jaccard_pairs": (q_ngram_jaccard, O_NGRAM_JACCARD),
-    "multimodal_features": (q_multimodal_features, O_MULTIMODAL),
     "ann_ivf_topk": (q_ann_ivf_topk, O_ANN_IVF),
 }
 
@@ -738,36 +672,6 @@ FROM e WHERE event_idx != 0 GROUP BY source
 """
 
 EXT_QUERIES["slow_resume_offset"] = (q_resume_offset, O_RESUME_OFFSET)
-
-
-# -- multimodal: video frame-sampling plan (JVM-side expansion) ----------------
-
-def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every-10th-frame sampling plan for video rows: the (id, n_frames) ->
-    frame_idx expansion runs JVM-side (explode(sequence(...))); only the
-    actual frame decode is the stubbed Python kernel."""
-    from mysql_log_parser_spark.textops.multimodal import frame_sample
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    media = d.where(F.col("doc_id") % 3 == 2).select(
-        F.concat(F.lit("m"), F.col("doc_id").cast("string")).alias("id"),
-        F.lit("video").alias("kind"),
-        F.struct(
-            (30 * (F.col("doc_id") % 10 + 1)).cast("int").alias("n_frames")
-        ).alias("meta"),
-    )
-    return frame_sample(media, every_n=10).select(
-        "id", F.col("frame_idx").cast("long").alias("frame_idx")
-    )
-
-
-O_FRAME_SAMPLE = """
-SELECT 'm' || CAST(doc_id AS VARCHAR) AS id,
-       CAST(unnest(range(0, CAST(30 * (doc_id % 10 + 1) AS BIGINT), 10)) AS BIGINT) AS frame_idx
-FROM documents WHERE doc_id % 3 = 2
-"""
-
-EXT_QUERIES["multimodal_frame_sample"] = (q_frame_sample, O_FRAME_SAMPLE)
 
 
 # -- per-sink per-class digest (north-star: per-sink aggregate-count parity) ---
@@ -1602,67 +1506,6 @@ FROM e
 """
 
 EXT_QUERIES["slow_global_sketch"] = (q_global_sketch, O_GLOBAL_SKETCH)
-
-
-# -- multimodal resize (nearest-neighbor over opaque buffers) ------------------
-
-_RSZ_TW, _RSZ_TH = 8, 4
-
-
-def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The resize leg of the multimodal plumbing (textops/multimodal.py
-    resize_images): documents.text as the opaque grayscale buffer, per-doc
-    width/height derived deterministically, nearest-neighbor resample to
-    8x4 in the Arrow kernel.  The oracle recomputes every resampled byte
-    with the same index math (cyclic tiling + y*h//th, x*w//tw) and md5s
-    the resized buffer, so a one-pixel drift flips the hash."""
-    from mysql_log_parser_spark.textops.multimodal import resize_images
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
-        F.col("doc_id") % 3 == 0
-    )
-    media = d.select(
-        F.concat(F.lit("m"), F.col("doc_id").cast("string")).alias("id"),
-        F.lit("image").alias("kind"),
-        F.encode(F.col("text"), "utf-8").alias("data"),
-        F.struct(
-            (16 + F.col("doc_id") % 7).cast("int").alias("width"),
-            (8 + F.col("doc_id") % 5).cast("int").alias("height"),
-            F.lit(None).cast("int").alias("sample_rate"),
-            F.lit(None).cast("int").alias("n_frames"),
-        ).alias("meta"),
-    )
-    out = resize_images(media, _RSZ_TW, _RSZ_TH)
-    return out.select(
-        "id",
-        F.col("meta.width").cast("long").alias("out_w"),
-        F.col("meta.height").cast("long").alias("out_h"),
-        F.lower(F.md5("data")).alias("resized_md5"),
-    )
-
-
-O_MULTIMODAL_RESIZE = f"""
-WITH m AS (
-  SELECT 'm' || CAST(doc_id AS VARCHAR) AS id,
-         CAST(16 + doc_id % 7 AS BIGINT) AS w,
-         CAST(8 + doc_id % 5 AS BIGINT) AS h,
-         text
-  FROM documents WHERE doc_id % 3 = 0
-)
-SELECT id,
-       CAST({_RSZ_TW} AS BIGINT) AS out_w,
-       CAST({_RSZ_TH} AS BIGINT) AS out_h,
-       lower(md5(array_to_string(
-         [text[((((i // {_RSZ_TW}) * h // {_RSZ_TH}) * w
-                 + ((i % {_RSZ_TW}) * w // {_RSZ_TW})) % length(text)) + 1
-               :((((i // {_RSZ_TW}) * h // {_RSZ_TH}) * w
-                 + ((i % {_RSZ_TW}) * w // {_RSZ_TW})) % length(text)) + 1]
-          for i in range(0, {_RSZ_TW * _RSZ_TH})],
-         ''))) AS resized_md5
-FROM m
-"""
-
-EXT_QUERIES["multimodal_resize"] = (q_multimodal_resize, O_MULTIMODAL_RESIZE)
 
 
 # -- line-level boilerplate removal (C4/RefinedWeb-style) ----------------------

@@ -17,8 +17,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -742,124 +740,6 @@ FROM base b LEFT JOIN wf USING (doc_id) LEFT JOIN bg USING (doc_id)
 """
 
 TEXTOPS_QUERIES["repetition_stats"] = (q_repetition_stats, O_REPETITION_STATS)
-
-
-# -- 12. PII redaction ---------------------------------------------------------
-
-_PII_MOD = 7
-
-
-def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus carries no PII, so every doc_id % 7 == 0 doc gets the SAME
-    deterministic email+phone suffix in both engines; the redaction result
-    is hash-compared via md5 of the redacted text."""
-    from mysql_log_parser_spark.textops.pii import with_pii_redaction
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % _PII_MOD == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" contact u"),
-                F.col("doc_id").cast("string"),
-                F.lit("@example.com or 555-123-4567"),
-            ),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    return with_pii_redaction(d).select(
-        "doc_id", "n_emails", "n_phones", "pii_clean", "redacted_md5"
-    )
-
-
-O_PII_REDACT = f"""
-WITH d AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % {_PII_MOD} = 0
-              THEN text || ' contact u' || CAST(doc_id AS VARCHAR) || '@example.com or 555-123-4567'
-              ELSE text END AS text
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{{2,}}')) AS BIGINT) AS n_emails,
-       CAST(len(regexp_extract_all(text, '\\b\\d{{3}}-\\d{{3}}-\\d{{4}}\\b')) AS BIGINT) AS n_phones,
-       (len(regexp_extract_all(text, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{{2,}}'))
-        + len(regexp_extract_all(text, '\\b\\d{{3}}-\\d{{3}}-\\d{{4}}\\b'))) = 0 AS pii_clean,
-       md5(regexp_replace(
-             regexp_replace(text, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{{2,}}', '<EMAIL>', 'g'),
-             '\\b\\d{{3}}-\\d{{3}}-\\d{{4}}\\b', '<PHONE>', 'g')) AS redacted_md5
-FROM d
-"""
-
-TEXTOPS_QUERIES["pii_redact"] = (q_pii_redact, O_PII_REDACT)
-
-
-# -- 13. benchmark decontamination ---------------------------------------------
-
-_DECON_N = 5
-_DECON_MOD = 11
-
-
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every doc_id % 11 == 0 doc plays the 'benchmark set'; its distinct
-    word 5-grams are broadcast and every doc is scored by overlap count.
-    The probe docs trivially flag themselves — exactly what a real
-    decontamination pass does to verbatim benchmark leakage."""
-    from mysql_log_parser_spark.textops.decontam import (
-        contamination_hits,
-        probe_ngrams,
-    )
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    probes = probe_ngrams(d.where(F.col("doc_id") % _DECON_MOD == 0), n=_DECON_N)
-    return contamination_hits(d, probes, n=_DECON_N)
-
-
-O_DECONTAMINATE = f"""
-WITH w AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x != '') AS w
-  FROM documents
-), g AS (
-  SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id,
-           unnest([array_to_string(w[i:i+{_DECON_N - 1}], ' ')
-                   for i in generate_series(1, len(w) - {_DECON_N - 1})]) AS gram
-    FROM w WHERE len(w) >= {_DECON_N}
-  )
-), p AS (
-  SELECT DISTINCT gram FROM g WHERE doc_id % {_DECON_MOD} = 0
-), h AS (
-  SELECT g.doc_id, count(*) AS n FROM g JOIN p USING (gram) GROUP BY g.doc_id
-)
-SELECT d.doc_id,
-       CAST(COALESCE(h.n, 0) AS BIGINT) AS n_probe_hits,
-       COALESCE(h.n, 0) > 0 AS contaminated
-FROM documents d LEFT JOIN h USING (doc_id)
-"""
-
-TEXTOPS_QUERIES["decontaminate"] = (q_decontaminate, O_DECONTAMINATE)
-
-
-def q_decontaminate_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same decontamination semantics through the NON-broadcast path
-    (probes_broadcastable=False): bounded bucket prefilter + pinned shuffle
-    hash join — the plan used when the probe set outgrows the executor
-    broadcast budget.  Gated against the identical oracle as `decontaminate`,
-    so both join strategies must produce byte-identical results."""
-    from mysql_log_parser_spark.textops.decontam import (
-        contamination_hits,
-        probe_ngrams,
-    )
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    probes = probe_ngrams(d.where(F.col("doc_id") % _DECON_MOD == 0), n=_DECON_N)
-    return contamination_hits(
-        d, probes, n=_DECON_N, probes_broadcastable=False
-    )
-
-
-TEXTOPS_QUERIES["decontaminate_shuffle"] = (q_decontaminate_shuffle, O_DECONTAMINATE)
 
 
 # -- 14. dedup components: pairs -> canonical keep-list ------------------------
@@ -2120,45 +2000,6 @@ FROM k GROUP BY prefix_md5 HAVING count(*) > 1
 TEXTOPS_QUERIES["prefix_dup_groups"] = (q_prefix_dup_groups, O_PREFIX_DUP_GROUPS)
 
 
-# -- 28. token codec round-trip gate -------------------------------------------
-
-
-def q_tokens_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end gate on the input-table codec (tokenizer.py): text ->
-    int32 token array (the table contract) -> decoded text, hashed — the
-    oracle hashes the ORIGINAL text, so any lossiness anywhere in the
-    encode/decode pair (truncation, signedness, codepoint handling) flips
-    the hash.  One Arrow pass each way, no shuffle."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    from mysql_log_parser_spark import entry_queries as EQ
-    from mysql_log_parser_spark.tokenizer import decode_batch
-
-    @pandas_udf(StringType())
-    def decode_udf(tokens: pd.Series) -> pd.Series:
-        return pd.Series(decode_batch(tokens))
-
-    d = _docs(spark, sf_dir).select(
-        "doc_id", EQ.encode_tokens("text").alias("tokens")
-    )
-    return d.select(
-        "doc_id",
-        F.size("tokens").cast("long").alias("n_tok"),
-        F.md5(decode_udf("tokens")).alias("text_md5"),
-    )
-
-
-O_TOKENS_ROUNDTRIP = """
-SELECT doc_id,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_tok,
-       md5(text) AS text_md5
-FROM documents
-"""
-
-TEXTOPS_QUERIES["tokens_roundtrip"] = (q_tokens_roundtrip, O_TOKENS_ROUNDTRIP)
-
-
 # -- 29. exact-substring span dedup (ExactSubstr) ------------------------------
 
 _SPAN_K = 24
@@ -2407,193 +2248,6 @@ FROM s
 """
 
 TEXTOPS_QUERIES["quality_classifier"] = (q_quality_classifier, _O_QUALITY_CLASSIFIER)
-
-
-# -- 32. winnowing fingerprints (MOSS local fingerprinting) ---------------------
-
-_WN_K = 5   # k-gram length
-_WN_W = 4   # winnowing window -> guarantee threshold t = K + W - 1 = 8
-_WN_POSCAP = 1 << 20
-_WN_DF_CAP = 8    # dup-pair prefilter: drop fingerprints in > CAP docs
-_WN_SHARED = 10   # dup-pair report threshold
-# pair mining wants DISTINCTIVE k-grams: at k=5 the synthetic corpus's shared
-# vocabulary puts the median fingerprint in 34 docs and the df cap (rightly)
-# drops them all — k=12/w=8 (guarantee threshold t=19 chars) concentrates df
-# at 1-2 and surfaces 95/100 injected near-copies at sf0.01.
-_WNP_K = 12
-_WNP_W = 8
-
-
-def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc digest of the winnowed fingerprint set (Schleimer et al.
-    2003; textops/winnow.py).  Gated through the PRODUCTION arrow kernel
-    (per-doc-local numpy selection, zero shuffle before the groupBy — the
-    heavy_hitters precedent of gating a kernel against an exact SQL
-    oracle); the catalyst twin is parity-tested in tests/test_winnow.py.
-    The digest (count + fp/pos sums) pins both the selected hash VALUES
-    and the rightmost-min POSITIONS without shipping 60k rows through
-    the gate."""
-    from mysql_log_parser_spark.textops.winnow import winnow_fingerprints
-
-    fps = winnow_fingerprints(
-        _docs(spark, sf_dir).select("doc_id", "text"),
-        k=_WN_K, w=_WN_W, kernel="arrow",
-    )
-    return fps.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_fp"),
-        F.sum("fp").alias("fp_sum"),
-        F.sum("pos").alias("pos_sum"),
-    )
-
-
-def _o_winnow_fps() -> str:
-    """Winnowing in pure SQL: explode k-gram positions, window min over the
-    combined (hash, complemented-pos) bigint, distinct decode."""
-    return f"""
-WITH d AS (
-  SELECT doc_id, text FROM documents WHERE length(text) >= {_WN_K + _WN_W - 1}
-), g AS (
-  SELECT doc_id, length(text) - {_WN_K} + 1 AS npos,
-         unnest(range(1, length(text) - {_WN_K} + 2)) AS i, text
-  FROM d
-), hx AS (
-  SELECT doc_id, npos, i, md5(substr(text, i, {_WN_K})) AS h FROM g
-), c AS (
-  SELECT doc_id, npos, i,
-         {_hex_to_int('h', 1, 8)} * {_WN_POSCAP} + ({_WN_POSCAP - 1} - i) AS c
-  FROM hx
-), sel AS (
-  SELECT doc_id, npos, i,
-         min(c) OVER (PARTITION BY doc_id ORDER BY i
-                      ROWS BETWEEN CURRENT ROW AND {_WN_W - 1} FOLLOWING) AS s
-  FROM c
-), fps AS (
-  SELECT DISTINCT doc_id, s // {_WN_POSCAP} AS fp,
-         {_WN_POSCAP - 1} - (s % {_WN_POSCAP}) AS pos
-  FROM sel WHERE i <= npos - {_WN_W - 1}
-)
-"""
-
-
-O_WINNOW_FPS = _o_winnow_fps() + """
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fp,
-       CAST(sum(fp) AS BIGINT) AS fp_sum, CAST(sum(pos) AS BIGINT) AS pos_sum
-FROM fps GROUP BY doc_id
-"""
-
-TEXTOPS_QUERIES["winnow_fingerprints"] = (q_winnow_fingerprints, O_WINNOW_FPS)
-
-
-# -- 33. winnowing dup pairs (substring-level containment mining) ---------------
-
-def q_winnow_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Docs sharing >= {t} winnowed fingerprints — the substring-level dup
-    miner winnowing exists for: any shared run of >= k+w-1 chars leaves a
-    shared fingerprint, so mutated near-copies (here: every 5th doc
-    re-injected with an appended tail, the minhash-gate mutation) surface
-    even though their full-doc hashes differ.  Shape: fingerprint table ->
-    document-frequency prefilter (df <= {cap}, dropping boilerplate
-    k-grams so no bucket fans out — the LSH-band cap discipline) ->
-    self-join on fp -> pair count.  Never an all-pairs product; the join
-    key is the fingerprint, whose per-key width is bounded by the cap.
-    """
-    from mysql_log_parser_spark.textops.winnow import winnow_fingerprints
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    # injected ids are NEGATIVE (-(id+1)): structurally collision-free with
-    # any non-negative corpus id at any corpus size (the char_diversity
-    # scheme — a +100000 offset collides once the corpus passes 100k docs,
-    # and bench_scaling already runs at that boundary).
-    mut = d.where(F.col("doc_id") % 5 == 0).select(
-        (-(F.col("doc_id") + 1)).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzz qqq winnow tail")).alias("text"),
-    )
-    fps = (
-        winnow_fingerprints(d.unionByName(mut), k=_WNP_K, w=_WNP_W, kernel="arrow")
-        .select("doc_id", "fp")
-        .distinct()
-    )
-    keep = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df")).where(
-        F.col("df") <= _WN_DF_CAP
-    )
-    fz = fps.join(keep.select("fp"), "fp")
-    cnt = fz.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
-    a, b = fz.alias("a"), fz.alias("b")
-    pairs = (
-        a.join(b, "fp")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .where(F.col("shared") >= _WN_SHARED)
-    )
-    # containment = shared / min(|fps_a|, |fps_b|) over the SAME capped
-    # fingerprint space as `shared` — the MOSS asymmetric metric; a small
-    # doc fully embedded in a big one scores ~1000 permille even though
-    # its symmetric shared count is modest.
-    return (
-        pairs.join(cnt.select(F.col("doc_id").alias("id_a"), F.col("n_fp").alias("n_a")), "id_a")
-        .join(cnt.select(F.col("doc_id").alias("id_b"), F.col("n_fp").alias("n_b")), "id_b")
-        .select(
-            "id_a", "id_b", "shared", "n_a", "n_b",
-            F.expr("(1000 * shared) DIV least(n_a, n_b)").alias("containment_permille"),
-        )
-    )
-
-
-q_winnow_dup_pairs.__doc__ = q_winnow_dup_pairs.__doc__.format(
-    t=_WN_SHARED, cap=_WN_DF_CAP
-)
-
-
-def _o_winnow_pairs() -> str:
-    return f"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT -(doc_id + 1), text || ' zzz qqq winnow tail'
-  FROM documents WHERE doc_id % 5 = 0
-), d AS (
-  SELECT doc_id, text FROM corpus WHERE length(text) >= {_WNP_K + _WNP_W - 1}
-), g AS (
-  SELECT doc_id, length(text) - {_WNP_K} + 1 AS npos,
-         unnest(range(1, length(text) - {_WNP_K} + 2)) AS i, text
-  FROM d
-), hx AS (
-  SELECT doc_id, npos, i, md5(substr(text, i, {_WNP_K})) AS h FROM g
-), c AS (
-  SELECT doc_id, npos, i,
-         {_hex_to_int('h', 1, 8)} * {_WN_POSCAP} + ({_WN_POSCAP - 1} - i) AS c
-  FROM hx
-), sel AS (
-  SELECT doc_id, npos, i,
-         min(c) OVER (PARTITION BY doc_id ORDER BY i
-                      ROWS BETWEEN CURRENT ROW AND {_WNP_W - 1} FOLLOWING) AS s
-  FROM c
-), fps AS (
-  SELECT DISTINCT doc_id, s // {_WN_POSCAP} AS fp
-  FROM sel WHERE i <= npos - {_WNP_W - 1}
-), keep AS (
-  SELECT fp FROM fps GROUP BY fp HAVING count(*) <= {_WN_DF_CAP}
-), fz AS (
-  SELECT doc_id, fp FROM fps JOIN keep USING (fp)
-), cnt AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fp FROM fz GROUP BY doc_id
-), pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(count(*) AS BIGINT) AS shared
-  FROM fz a JOIN fz b USING (fp)
-  WHERE a.doc_id < b.doc_id
-  GROUP BY 1, 2 HAVING count(*) >= {_WN_SHARED}
-)
-SELECT id_a, id_b, shared, ca.n_fp AS n_a, cb.n_fp AS n_b,
-       CAST((1000 * shared) // least(ca.n_fp, cb.n_fp) AS BIGINT)
-         AS containment_permille
-FROM pairs JOIN cnt ca ON ca.doc_id = id_a JOIN cnt cb ON cb.doc_id = id_b
-"""
-
-
-TEXTOPS_QUERIES["winnow_dup_pairs"] = (q_winnow_dup_pairs, _o_winnow_pairs())
 
 
 # -- 34. temperature-scaled source mixing weights -------------------------------

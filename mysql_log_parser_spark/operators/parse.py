@@ -62,6 +62,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mysql_log_parser_spark import tokenizer
+
 # Regexes, 1:1 with slow.go:16-21 (Python `\Z` == Go `\z`).
 TIME_RE = re.compile(r"Time: (\S+\s{1,2}\S+)", re.ASCII)
 USER_RE = re.compile(r"User@Host: ([^\[]+|\[[^[]+\]).*?@ (\S*) \[(.*)\]", re.ASCII)
@@ -499,11 +501,27 @@ def _batch_inputs(batch: pa.RecordBatch) -> tuple[list, list, list, list]:
         arr = batch.column(names.index("tokens"))
         lens = arr.value_lengths().to_numpy(zero_copy_only=False)
         lens = np.nan_to_num(lens, nan=0).astype(np.int64)
-        flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.uint8)
-        data = flat.tobytes()  # one bulk copy for the whole batch
+        flat = arr.flatten().to_numpy(zero_copy_only=False)
         ends = np.cumsum(lens)
         starts = ends - lens
-        texts = [data[s:e].decode("utf-8") for s, e in zip(starts, ends)]
+        # one min/max over the whole batch; only a failing batch pays for
+        # locating the offending doc
+        if flat.size and (flat.min() < 0 or flat.max() > 255):
+            pos = np.flatnonzero((flat < 0) | (flat > 255))[0]
+            doc = doc_ids[np.searchsorted(ends, pos, side="right")]
+            raise ValueError(
+                f"doc {doc!r}: token id {int(flat[pos])} outside byte vocab [0,255]"
+            )
+        data = flat.astype(np.uint8).tobytes()  # one bulk copy for the whole batch
+        texts = []
+        for doc, s, e in zip(doc_ids, starts, ends):
+            try:
+                texts.append(data[s:e].decode("utf-8"))
+            except UnicodeDecodeError as exc:
+                raise ValueError(
+                    f"doc {doc!r}: tokens are not valid UTF-8 "
+                    f"({exc.reason} at byte {exc.start})"
+                ) from None
     if "start_offset" in names:
         so = batch.column(names.index("start_offset")).to_pylist()
         start_offsets = [int(x) if x is not None else 0 for x in so]
@@ -520,10 +538,7 @@ def _parse_batch(pdf: pd.DataFrame, admin_filter: frozenset[str]) -> pd.DataFram
     if "text" in pdf.columns:
         texts = pdf["text"].tolist()
     else:
-        texts = [
-            np.asarray(t, dtype=np.int64).astype(np.uint8).tobytes().decode("utf-8")
-            for t in pdf["tokens"]
-        ]
+        texts = tokenizer.decode_batch(pdf["tokens"])
     if "start_offset" in pdf.columns and n:
         start_offsets = pdf["start_offset"].fillna(0).astype("int64").tolist()
     else:

@@ -5,7 +5,7 @@ Every knob here is plain public Spark configuration:
 
 - AQE on (runtime shuffle coalescing + skew-join splitting) — the runtime
   counterpart of the reference's fixed worker pool (bin/parser-cli.go:53-56).
-- Arrow enabled for all pandas UDF exchange (the parse stage is mapInPandas).
+- Arrow enabled for all pandas UDF exchange (the parse stage is mapInArrow).
 - shuffle.partitions sized ~2x cores for local mode; on a real cluster set
   spark.sql.shuffle.partitions ~= 2-3x total executor cores (AQE coalesces
   down, it cannot split a too-coarse map side other than via skew handling).

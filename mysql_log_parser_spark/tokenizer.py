@@ -26,11 +26,8 @@ def decode(tokens) -> str:
 
 
 def decode_batch(token_series) -> list[str]:
-    """Vectorized-ish decode of a pandas Series of token arrays."""
-    return [
-        np.asarray(t, dtype=np.int64).astype(np.uint8).tobytes().decode("utf-8")
-        for t in token_series
-    ]
+    """Decode a pandas Series of token arrays, each with decode's range check."""
+    return [decode(t) for t in token_series]
 
 
 def doc_rows(doc_id: str, text: str, source: str) -> dict:

@@ -16,6 +16,8 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
     "events", "documents", "embeddings",
 ]
+# the correctness gate records at most this many queries() entries per round
+GATE_CAP = 50
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(SF_DIR), reason="driver testdata not available"
@@ -48,6 +50,18 @@ def _dtype_kind(s: pd.Series) -> str:
     keeps its numpy kind."""
     k = s.dtype.kind
     return "i" if k in ("i", "u") else k
+
+
+def test_gate_contract():
+    """Every entry has an oracle, and the entries the gate records first
+    (`_VERIFY_FIRST`) are all live and fit under its cap, so no rotation slot
+    is spent on a name that no longer exists."""
+    assert set(entry_mod.queries()) == set(entry_mod.oracle_sql())
+    first = entry_mod._VERIFY_FIRST
+    assert len(first) <= GATE_CAP
+    assert len(set(first)) == len(first)
+    assert set(first) <= set(entry_mod.queries())
+    assert list(entry_mod.queries())[: len(first)] == first
 
 
 @pytest.mark.parametrize("name", list(entry_mod.queries().keys()))

@@ -95,40 +95,6 @@ def test_repetition_is_narrow_single_fold(spark):
     assert plan.count("aggregate(") == 2, plan.count("aggregate(")
 
 
-def test_decontaminate_broadcasts_probes(spark):
-    from mysql_log_parser_spark.textops.decontam import (
-        contamination_hits,
-        probe_ngrams,
-    )
-
-    d = _docs_df(spark)
-    hits = contamination_hits(d, probe_ngrams(d.where(F.col("doc_id") % 9 == 0)))
-    plan = _plan(hits)
-    assert "BroadcastHashJoin" in plan
-    assert "EvalPython" not in plan
-
-
-def test_decontaminate_shuffle_path_never_broadcasts_probes(spark):
-    """probes_broadcastable=False: the gram join must be a pinned shuffle
-    hash join (the caller declared the probe set too big to broadcast) and
-    the only broadcast is the bounded bucket prefilter."""
-    from mysql_log_parser_spark.textops.decontam import (
-        contamination_hits,
-        probe_ngrams,
-    )
-
-    d = _docs_df(spark)
-    probes = probe_ngrams(d.where(F.col("doc_id") % 9 == 0))
-    plan = _plan(
-        contamination_hits(d, probes, probes_broadcastable=False)
-    )
-    assert "ShuffledHashJoin" in plan, "gram join lost the pinned shuffle strategy"
-    assert "LeftSemi, BuildRight" in plan or "BroadcastHashJoin" in plan, (
-        "bucket prefilter missing"
-    )
-    assert "EvalPython" not in plan
-
-
 def test_ann_rerank_prenorm_single_fold_per_pair(spark):
     """Brute-force top-k: norms computed once per side BEFORE the join
     (in the per-side Projects), so the post-join cosine is a single dot
@@ -307,9 +273,6 @@ def test_round3_queries_no_rowwise_python(spark):
     for name in lazy_new:
         plan = _plan(reg[name][0](spark, sf))
         assert "BatchEvalPython" not in plan, name
-    # multimodal_resize: kernel is mapInPandas by design
-    plan = _plan(reg["multimodal_resize"][0](spark, sf))
-    assert "MapInPandas" in plan and "BatchEvalPython" not in plan
 
 
 def test_round4_queries_no_rowwise_python(spark):
@@ -349,8 +312,7 @@ def test_round4b_queries_plan_shape(spark):
         pytest.skip("driver testdata not available")
     reg = dict(TEXTOPS_QUERIES)
     reg.update(EXT_QUERIES)
-    for name in ["ann_ivfpq_rerank", "mix_temperature",
-                 "winnow_fingerprints", "winnow_dup_pairs"]:
+    for name in ["ann_ivfpq_rerank", "mix_temperature"]:
         plan = _plan(reg[name][0](spark, sf))
         assert "BatchEvalPython" not in plan, name
     rerank = _plan(reg["ann_ivfpq_rerank"][0](spark, sf))

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -198,3 +199,44 @@ def test_mg_merge_superset_guarantee(stream, k):
     for tok, cnt in Counter(stream).items():
         if cnt > n / (k + 1):
             assert tok in acc.index, (tok, cnt, n, k)
+
+
+# -- tokens input contract: malformed docs fail loudly, naming the doc ------
+
+def _tokens_batch(token_lists):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([f"d{i}" for i in range(len(token_lists))]),
+            pa.array(token_lists, pa.list_(pa.int32())),
+        ],
+        names=["doc_id", "tokens"],
+    )
+
+
+@pytest.mark.parametrize(
+    "bad, msg",
+    [
+        ([300], "token id 300 outside byte vocab"),
+        ([-1], "token id -1 outside byte vocab"),
+        ([0xFF], "not valid UTF-8"),
+    ],
+)
+def test_batch_inputs_rejects_malformed_tokens(bad, msg):
+    """Out-of-range ids used to wrap (300 -> ',', -1 -> 0xff) and invalid
+    UTF-8 raised an anonymous UnicodeDecodeError; both now raise a
+    ValueError naming the offending doc, even behind an empty doc."""
+    from mysql_log_parser_spark.operators.parse import _batch_inputs
+
+    with pytest.raises(ValueError, match=rf"doc 'd2': .*{msg}"):
+        _batch_inputs(_tokens_batch([[65, 66], [], bad + [65]]))
+
+
+def test_batch_inputs_empty_and_null_tokens():
+    """An empty or null token array is an empty doc, not an error."""
+    from mysql_log_parser_spark.operators.parse import _batch_inputs
+
+    doc_ids, _, texts, _ = _batch_inputs(_tokens_batch([[104, 105], [], None]))
+    assert doc_ids == ["d0", "d1", "d2"]
+    assert texts == ["hi", "", ""]

@@ -1,11 +1,9 @@
 """Training-data operator tests: dedup (exact/minhash-LSH/simhash/jaccard),
-similarity search (brute-force + LSH ANN recall), text analysis, multimodal
-plumbing."""
+similarity search (brute-force + LSH ANN recall), text analysis."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from mysql_log_parser_spark.textops import multimodal
 from mysql_log_parser_spark.textops.dedup import (
     exact_duplicates,
     minhash_dedup_pairs,
@@ -145,23 +143,6 @@ def test_text_stats(spark, docs):
     assert a is not None
 
 
-def test_multimodal_plumbing(spark):
-    media = multimodal.synth_media(spark, n=24)
-    feats = multimodal.extract_features(media, decoder="fake", dim=8)
-    rows = feats.collect()
-    assert len(rows) == 24
-    assert all(len(r.feature) == 8 for r in rows)
-    # deterministic: same bytes -> same features
-    again = {r.id: r.feature for r in multimodal.extract_features(media).collect()}
-    assert all(again[r.id] == r.feature for r in rows)
-    # real decoders are stubbed with a clear error
-    with pytest.raises(Exception, match="NotImplementedError|not installed"):
-        multimodal.extract_features(media, decoder="pil").collect()
-    # frame sampling expands video rows JVM-side
-    fs = multimodal.frame_sample(media, every_n=30).collect()
-    assert len(fs) > 0 and all(r.frame_idx % 30 == 0 for r in fs)
-
-
 def test_pack_sequences_roundtrip(spark):
     """Concatenating the packed sequences must reproduce each source's
     token stream exactly (order, content, and length)."""
@@ -207,55 +188,6 @@ def test_repetition_features_edges(spark):
     assert r[2]["max_word_freq"] == 1 and r[2]["distinct_word_permille"] == 1000
     assert r[3]["n_words"] == 1 and r[3]["max_bigram_freq"] == 0
     assert r[4]["n_words"] == 0 and r[4]["word_rep_permille"] == 0
-
-
-def test_pii_redaction(spark):
-    from mysql_log_parser_spark.textops.pii import with_pii_redaction
-
-    df = spark.createDataFrame(
-        [
-            (0, "mail me at a.b+c@ex-site.org or x@y.io"),
-            (1, "call 555-123-4567 now"),
-            (2, "clean text"),
-            (3, "both bob@corp.com and 111-222-3333"),
-            (4, "not a phone 55-123-4567 or 5555-123-4567x"),
-        ],
-        "doc_id long, text string",
-    )
-    r = {row["doc_id"]: row for row in with_pii_redaction(df).collect()}
-    assert r[0]["n_emails"] == 2 and r[0]["redacted"] == "mail me at <EMAIL> or <EMAIL>"
-    assert r[1]["n_phones"] == 1 and r[1]["redacted"] == "call <PHONE> now"
-    assert r[2]["pii_clean"] and r[2]["redacted"] == "clean text"
-    assert r[3]["redacted"] == "both <EMAIL> and <PHONE>"
-    # \b guards: digit runs that aren't exactly 3-3-4 at word boundaries stay
-    assert r[4]["n_phones"] == 0 and not r[4]["redacted"].count("<PHONE>")
-
-
-def test_decontamination(spark):
-    from mysql_log_parser_spark.textops.decontam import (
-        contamination_hits,
-        probe_ngrams,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (0, "the quick brown fox jumps over the lazy dog"),
-            (1, "a clean doc with no benchmark overlap at all"),
-            (2, "prefix words then the quick brown fox jumps verbatim"),
-            (3, "short doc"),  # < n words: no grams, never contaminated
-        ],
-        "doc_id long, text string",
-    )
-    bench = docs.where(F.col("doc_id") == 0)
-    r = {
-        row["doc_id"]: row
-        for row in contamination_hits(docs, probe_ngrams(bench, n=5), n=5).collect()
-    }
-    assert len(r) == 4  # zero-hit docs preserved by the left join
-    assert r[0]["contaminated"]  # benchmark doc flags itself
-    assert r[2]["contaminated"] and r[2]["n_probe_hits"] == 1  # "the quick brown fox jumps"
-    assert not r[1]["contaminated"] and r[1]["n_probe_hits"] == 0
-    assert not r[3]["contaminated"]
 
 
 def test_components_from_pairs(spark):
@@ -828,34 +760,6 @@ def test_bpe_merge_matches_string_replace_semantics(spark):
         for r in bpe_merge_step(toks, new_id=256).collect()
     }
     assert got == expected
-
-
-def test_resize_images_nearest_neighbor(spark):
-    """resize_images: output buffers are exactly target_w*target_h bytes,
-    metadata is rewritten, non-image rows are excluded, and the resample
-    matches an independently computed nearest-neighbor reference."""
-    media = multimodal.synth_media(spark, n=9, seed=7)
-    out = {r["id"]: r for r in multimodal.resize_images(media, 8, 4).collect()}
-
-    src = {r["id"]: r for r in media.where("kind = 'image'").collect()}
-    assert set(out) == set(src) and out, "image rows must map 1:1"
-    for mid, r in out.items():
-        assert len(r["data"]) == 8 * 4
-        assert r["meta"]["width"] == 8 and r["meta"]["height"] == 4
-        # reference resample in pure python
-        s = src[mid]
-        w, h = s["meta"]["width"], s["meta"]["height"]
-        buf = bytes(s["data"])
-        full = [(buf * ((w * h) // len(buf) + 1))[: w * h][y * w : (y + 1) * w] for y in range(h)]
-        expect = bytes(
-            full[y * h // 4][x * w // 8] for y in range(4) for x in range(8)
-        )
-        assert bytes(r["data"]) == expect, mid
-
-    import pytest as _pytest
-
-    with _pytest.raises(NotImplementedError):
-        multimodal.resize_images(media, 8, 4, decoder="pil")
 
 
 def test_duplicate_span_stats_counts_and_short_docs(spark):
